@@ -171,6 +171,10 @@ def embedding_knn(
             # lazy-vs-full parity test.
             if k == 1:
                 mx = S.max(axis=1)
+                # a row whose only peer is itself has no neighbour (all
+                # -inf); drop it, as the top-k branch drops non-finite sims
+                live = np.isfinite(mx)
+                S, mx, qids = S[live], mx[live], qids[live]
                 best = round_half_away(mx, round_digits)
                 rows, cols = np.nonzero(S >= (mx[:, None] - thr))
                 cand_r = round_half_away(S[rows, cols], round_digits)

@@ -1,35 +1,122 @@
-"""Candidate generation: LSH band explode + self-equi-join + CB prune.
+"""Candidate generation: a keyed self-join under the CB prune.
 
-Replaces the reference's O(N^2) pair enumeration
-(/root/reference/src/selection.cpp:270-291, selection_cuda.cpp:146-150)
-with the Spark-native equivalent: a pair survives iff
+Replaces the reference's O(N^2) pair enumeration (src/selection.cpp:
+270-291, selection_cuda.cpp:146-150) with the Spark-native
+equivalent: a pair survives iff
 
   - both cardinalities > 0 (selection.cpp:281 skip),
   - CB: min(card)/max(card) >= tau (criteria_sketch.hpp:45-49 — the
     sorted+break loop is just an early-exit evaluation of this same
     symmetric predicate, so no global sort is needed),
-  - smh_a: SOME band of r consecutive signature values is equal
-    (criteria_sketch.hpp:66-81) == equi-join on the raw band slice.
+  - it shares a join key: for smh_a, SOME band of r consecutive
+    signature values is equal (criteria_sketch.hpp:66-81) == equi-join
+    on ``(band_id, band)``; for the non-LSH criteria, the same or an
+    adjacent log-cardinality bucket ``bkt``, which every CB-surviving
+    pair has (``cb_bucket_pairs``).
 
 Joining on the raw band slice (array<long>) makes hash collisions
 impossible by construction — band equality IS the join condition.
-An xxhash64 of the slice is used only as an optional narrow pre-key.
 
-Scale notes (north_rule):
-- band rows are (band_id, band slice, url_id, card_i) — no urls, no
-  16KiB register blobs through this shuffle;
-- AQE skew-join splitting handles hot band keys (template pages);
-  ``max_band_bucket`` optionally caps pathological buckets (off by
-  default: parity keeps every colliding pair);
-- the CB filter runs pre-dedup, cutting the dropDuplicates shuffle.
+Both generators share one self-join (``_self_join``: ``id_a < id_b``,
+CB before the dedup shuffle, ``dropDuplicates``) and one flood guard:
+
+- ``max_band_bucket`` / ``max_bucket`` (``_drop_oversized``): drop the
+  docs of every key holding more rows than the cap (last-resort guard;
+  OFF by default, since parity keeps every colliding pair).
+- ``salt_target`` (``_salt``): explicit two-level salting, the
+  OpenMP-dynamic-schedule analogue the reference uses for skewed
+  per-file cost (src/build_sketch.cpp:232; SURVEY §4). A key whose
+  per-side load f exceeds the target is split into s = ceil(f / target)
+  salt blocks per side; a joins on (key, own salt, every salt) and b on
+  (key, every salt, own salt), spreading the f^2 pair work over s^2
+  shuffle keys of ~target^2 work each while emitting every pair exactly
+  once (a's salt pins sa, b's pins sb). Keys at or under the target are
+  untouched (s = 1). OFF by default: AQE skew-join splitting covers
+  moderate skew; turn it on when one template clique exceeds what a
+  single task should hold.
+
+Sides stay narrow — ``(key, id, card)`` only: no urls, no 16 KiB
+register blobs and no aux payload through these shuffles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..oracle import DedupConfig
+
+
+def _cb_keep(tau: float) -> Column:
+    """The CB predicate over a pair's cardinalities (symmetric form)."""
+    return (
+        F.least("card_a", "card_b").cast("double")
+        / F.greatest("card_a", "card_b").cast("double")
+        >= F.lit(tau)
+    )
+
+
+def _drop_oversized(
+    rows: DataFrame, key: list[str], max_bucket: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """-> (rows without the docs of keys over ``max_bucket``, per-key
+    sizes ``(*key, _n)`` of the keys kept).
+
+    Caps on each key's OWN size, before the sides are built: capping on
+    the exploded join-key load of ``cb_bucket_pairs`` would also drop
+    keys k-1/k+1 merely adjacent to a flooded bucket k, silently losing
+    their non-flooded pairs.
+    """
+    sizes = rows.groupBy(*key).agg(F.count("*").alias("_n"))
+    if max_bucket is not None:
+        over = sizes.where(F.col("_n") > max_bucket).select(*key)
+        rows = rows.join(F.broadcast(over), key, "left_anti")
+        sizes = sizes.where(F.col("_n") <= max_bucket)
+    return rows, sizes
+
+
+def _salt(
+    a: DataFrame, b: DataFrame, key: list[str], load: DataFrame, salt_target: int
+) -> tuple[DataFrame, DataFrame]:
+    """Two-level salting of the sides ``(*key, id_x, card_x)``; ``load``
+    is ``(*key, _load)``, the largest per-side row count of each key.
+    Join the results on ``key + ["sa", "sb"]``."""
+    hot = F.broadcast(load.where(F.col("_load") > salt_target))
+    s = F.ceil(F.coalesce(F.col("_load"), F.lit(1)) / F.lit(salt_target)).cast("int")
+    every = F.explode(F.sequence(F.lit(0), s - 1))
+    a = a.join(hot, key, "left").select(
+        *key,
+        F.pmod(F.xxhash64("id_a"), s).cast("int").alias("sa"),
+        every.alias("sb"),
+        "id_a",
+        "card_a",
+    )
+    b = b.join(hot, key, "left").select(
+        *key,
+        every.alias("sa"),
+        F.pmod(F.xxhash64("id_b"), s).cast("int").alias("sb"),
+        "id_b",
+        "card_b",
+    )
+    return a, b
+
+
+def _self_join(a: DataFrame, b: DataFrame, key: list[str], tau: float) -> DataFrame:
+    """-> (id_a, id_b, card_a, card_b), id_a < id_b, CB-surviving, each
+    pair once (a pair sharing several keys joins once per key)."""
+    return (
+        a.join(b, key)
+        .where(F.col("id_a") < F.col("id_b"))
+        .where(_cb_keep(tau))
+        .select("id_a", "id_b", "card_a", "card_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _adjacent(bkt: Column) -> Column:
+    return F.explode(F.array(bkt - 1, bkt, bkt + 1))
 
 
 def cb_bucket_pairs(
@@ -50,127 +137,57 @@ def cb_bucket_pairs(
     adjacent buckets: the join is followed by an ``id_a < id_b`` filter,
     and a straddling pair whose lower-bucket doc has the larger url_id
     only survives in the (a=higher-bucket, b=lower-bucket) orientation.
-    The exact CB predicate re-filters after the join; dropDuplicates
-    collapses the same-bucket double match. When the criterion needs
-    hll_aux blobs they are joined back AFTER the pair dedup (late
-    payload attach — the narrow sides above explain why).
 
     Flood guard: at tau=0.9 one bucket spans only ~11% in cardinality,
     and web corpora concentrate document sizes — ~100 buckets cover
     10..10^6-shingle docs, so at 10^12 docs a single bucket holds
     ~10^10 rows and an unguarded self-join is quadratic within it.
-    ``salt_target`` applies the same two-level salting as
-    ``candidate_pairs``: a bucket whose side-load exceeds the target is
-    split into s salt blocks per side, spreading the f^2 pair work over
-    s^2 shuffle keys while emitting every pair exactly once (a's salt
-    pins sa, b's pins sb). ``max_bucket`` drops oversized buckets
-    entirely (last-resort cap; OFF for parity). Note the criterion
-    itself stays inherently pairwise post-CB — that is the reference's
-    hll_a/hll_an semantics (selection.cpp evaluates every CB-surviving
-    pair); smh_a's banded LSH remains the 10^12-doc scale default, with
-    salting making hll_a/hll_an *executable* at scale rather than
-    straggler-bound.
+    ``salt_target`` and ``max_bucket`` are the module's flood guard; a
+    bucket's salting load is the larger side, n_k on a and
+    n_{k-1}+n_k+n_{k+1} on b. The criterion itself stays inherently
+    pairwise post-CB — that is the reference's hll_a/hll_an semantics
+    (selection.cpp evaluates every CB-surviving pair); smh_a's banded
+    LSH remains the 10^12-doc scale default, with salting making
+    hll_a/hll_an *executable* at scale rather than straggler-bound.
     """
-    import math
-
     inv_log = 1.0 / math.log(1.0 / cfg.tau)
-    has_aux = "hll_aux" in sketches.columns
-    base = (
-        sketches.where(F.col("card_i") > 0)
-        .select("url_id", "card_i", F.floor(F.log(F.col("card_i").cast("double")) * F.lit(inv_log)).alias("bkt"))
+    key = ["bkt"]
+    rows = sketches.where(F.col("card_i") > 0).select(
+        "url_id",
+        "card_i",
+        F.floor(F.log(F.col("card_i").cast("double")) * F.lit(inv_log)).alias("bkt"),
     )
-    join_key = ["bkt"]
     if salt_target is not None or max_bucket is not None:
-        # per-BUCKET doc counts first (the stats table is tiny by
-        # construction — log-scale buckets: ~100s of rows for any
-        # corpus — so every join against it broadcasts)
-        na = base.groupBy("bkt").agg(F.count("*").alias("_na"))
-    if max_bucket is not None:
-        # cap = drop the DOCS of buckets whose OWN size exceeds the cap,
-        # BEFORE sides are built — capping on the exploded join-key load
-        # would also drop keys k-1/k+1 merely adjacent to a flooded
-        # bucket k (non-flooded neighbor pairs silently lost)
-        over = na.where(F.col("_na") > max_bucket).select("bkt")
-        base = base.join(F.broadcast(over), "bkt", "left_anti")
-        na = na.where(F.col("_na") <= max_bucket)
-    # NARROW sides: the hll_aux register blobs (256 B each) do NOT ride
-    # the bucket join, the salt explode, or the dropDuplicates exchange
-    # — pairs dedup on (id, card) only and the aux payload joins back
-    # AFTER the dedup, the same late-payload shape verify_pairs uses.
-    # At 10^10 CB-surviving pairs that is TBs of avoidable shuffle
-    # payload (guide §2.3 / §8: shuffle keys and metadata, attach heavy
-    # bytes once).
-    a = base.select(
-        F.col("bkt"),
-        F.col("url_id").alias("id_a"),
-        F.col("card_i").alias("card_a"),
-    )
-    b = base.select(
-        F.explode(F.array(F.col("bkt") - 1, F.col("bkt"), F.col("bkt") + 1)).alias("bkt"),
+        # log-scale buckets: ~100s of size rows for any corpus, so every
+        # join against them broadcasts
+        rows, sizes = _drop_oversized(rows, key, max_bucket)
+    a = rows.select("bkt", F.col("url_id").alias("id_a"), F.col("card_i").alias("card_a"))
+    b = rows.select(
+        _adjacent(F.col("bkt")).alias("bkt"),
         F.col("url_id").alias("id_b"),
         F.col("card_i").alias("card_b"),
     )
     if salt_target is not None:
-        # per-join-key load AFTER the cap: a-side sees n_k rows at key
-        # k, b-side sees n_{k-1}+n_k+n_{k+1} (the +-1 explode)
         nb = (
-            na.select(
-                F.explode(
-                    F.array(F.col("bkt") - 1, F.col("bkt"), F.col("bkt") + 1)
-                ).alias("bkt"),
-                "_na",
-            )
+            sizes.select(_adjacent(F.col("bkt")).alias("bkt"), "_n")
             .groupBy("bkt")
-            .agg(F.sum("_na").alias("_nb"))
+            .agg(F.sum("_n").alias("_nb"))
         )
-        stats = na.join(nb, "bkt").select(
-            "bkt", F.greatest("_na", "_nb").alias("_load")
-        )
-        hot = stats.where(F.col("_load") > salt_target)
-        s_col = F.ceil(
-            F.coalesce(F.col("_load"), F.lit(1)) / F.lit(salt_target)
-        ).cast("int")
-        all_salts = F.explode(F.sequence(F.lit(0), s_col - 1))
-        a_cols = [c for c in a.columns if c != "bkt"]
-        b_cols = [c for c in b.columns if c != "bkt"]
-        a = a.join(F.broadcast(hot), "bkt", "left").select(
-            "bkt",
-            F.pmod(F.xxhash64("id_a"), s_col).cast("int").alias("sa"),
-            all_salts.alias("sb"),
-            *a_cols,
-        )
-        b = b.join(F.broadcast(hot), "bkt", "left").select(
-            "bkt",
-            all_salts.alias("sa"),
-            F.pmod(F.xxhash64("id_b"), s_col).cast("int").alias("sb"),
-            *b_cols,
-        )
-        join_key = ["bkt", "sa", "sb"]
-    tau = cfg.tau
-    pairs = (
-        a.join(b, join_key)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            F.least("card_a", "card_b").cast("double")
-            / F.greatest("card_a", "card_b").cast("double")
-            >= F.lit(tau)
-        )
-        .drop(*join_key)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if has_aux:
-        payload = sketches.select("url_id", "hll_aux")
-        pairs = pairs.join(
-            payload.select(
-                F.col("url_id").alias("id_a"), F.col("hll_aux").alias("aux_a")
-            ),
-            "id_a",
-        ).join(
-            payload.select(
-                F.col("url_id").alias("id_b"), F.col("hll_aux").alias("aux_b")
-            ),
-            "id_b",
-        )
+        load = sizes.join(nb, "bkt").select("bkt", F.greatest("_n", "_nb").alias("_load"))
+        a, b = _salt(a, b, key, load, salt_target)
+        key = key + ["sa", "sb"]
+    pairs = _self_join(a, b, key, cfg.tau)
+    if "hll_aux" in sketches.columns:
+        # late payload attach: the 256 B aux blobs join back AFTER the
+        # pair dedup instead of riding the bucket join, the salt explode
+        # and the dedup exchange — at 10^10 CB-surviving pairs that is
+        # TBs of avoidable shuffle (guide §2.3 / §8), the same shape
+        # verify_pairs uses
+        for side in ("a", "b"):
+            payload = sketches.select(
+                F.col("url_id").alias(f"id_{side}"), F.col("hll_aux").alias(f"aux_{side}")
+            )
+            pairs = pairs.join(payload, f"id_{side}")
     return pairs
 
 
@@ -225,50 +242,6 @@ def aux_criterion_filter(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
     return pairs.mapInPandas(fn, schema=schema)
 
 
-def _star_pairs(
-    sketches: DataFrame, cfg: DedupConfig, max_band_bucket: int | None
-) -> DataFrame:
-    """Star pairing: every bucket member pairs with the bucket's
-    minimum url_id; CB still filters each pair.
-
-    The per-bucket minimum (and size, when capping) is a groupBy
-    aggregate joined back on the band key — partial (map-side)
-    aggregation computes the min in parallel, and the equi-join is
-    AQE-skew-splittable. A Window.partitionBy(band) formulation would
-    funnel every row of a hot bucket into ONE task (windows can't be
-    skew-split) — the exact flood case star mode exists for.
-    """
-    bands = explode_bands(sketches, cfg)
-    stats = bands.groupBy("band_id", "band").agg(
-        F.min(F.struct("url_id", "card_i")).alias("_min"),
-        F.count("*").alias("_n"),
-    )
-    if max_band_bucket is not None:
-        stats = stats.where(F.col("_n") <= max_band_bucket)
-    # inner join: rows in dropped (oversized) buckets simply don't match
-    annotated = bands.join(stats, ["band_id", "band"])
-    tau = cfg.tau
-    return (
-        annotated.where(F.col("url_id") != F.col("_min.url_id"))
-        .select(
-            F.least("url_id", F.col("_min.url_id")).alias("id_a"),
-            F.greatest("url_id", F.col("_min.url_id")).alias("id_b"),
-            F.when(F.col("url_id") < F.col("_min.url_id"), F.col("card_i"))
-            .otherwise(F.col("_min.card_i"))
-            .alias("card_a"),
-            F.when(F.col("url_id") < F.col("_min.url_id"), F.col("_min.card_i"))
-            .otherwise(F.col("card_i"))
-            .alias("card_b"),
-        )
-        .where(
-            F.least("card_a", "card_b").cast("double")
-            / F.greatest("card_a", "card_b").cast("double")
-            >= F.lit(tau)
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 def explode_bands(sketches: DataFrame, cfg: DedupConfig) -> DataFrame:
     """sketches -> (url_id, card_i, band_id, band) rows, n_bands per doc."""
     n_bands, n_rows = cfg.bands
@@ -301,85 +274,45 @@ def candidate_pairs(
         10^12-doc mode: candidate volume becomes linear in corpus size
         instead of quadratic in clique size.
 
-    ``max_band_bucket``: if set, band buckets larger than this are
-    dropped entirely (last-resort flood guard; OFF for parity).
-
-    ``salt_target``: explicit two-level salting for hot band keys in
-    parity mode (the OpenMP-dynamic-schedule analogue the reference
-    uses for skewed per-file cost, src/build_sketch.cpp:232; SURVEY §4).
-    A bucket of f rows is split into s = ceil(f / salt_target) salt
-    blocks; each side joins on (band, salt_a, salt_b), spreading the
-    f^2 pair work over s^2 shuffle keys of ~salt_target^2 work each
-    instead of one straggler key. Every pair still appears exactly once
-    (a's salt pins salt_a, b's pins salt_b). Buckets at or under
-    salt_target are untouched (s = 1). OFF by default: AQE skew-join
-    splitting covers moderate skew; turn this on when one template
-    clique exceeds what a single task should hold.
+    ``max_band_bucket`` and ``salt_target`` are the module's flood
+    guard (cap and salting of band buckets); salting applies to "all"
+    only, since star mode emits O(f) pairs per bucket already.
     """
-    if bucket_pairing == "star":
-        return _star_pairs(sketches, cfg, max_band_bucket)
+    key = ["band_id", "band"]
     bands = explode_bands(sketches, cfg)
-    sizes = None
-    if max_band_bucket is not None or salt_target is not None:
-        sizes = bands.groupBy("band_id", "band").agg(F.count("*").alias("_n"))
-    if max_band_bucket is not None:
-        bands = bands.join(
-            F.broadcast(sizes.where(F.col("_n") > max_band_bucket)),
-            ["band_id", "band"],
-            "left_anti",
+    if bucket_pairing == "star":
+        # per-bucket minimum (and size, when capping) as a groupBy
+        # aggregate joined back on the band key: partial (map-side)
+        # aggregation computes the min in parallel, and the equi-join is
+        # AQE-skew-splittable. A Window.partitionBy(band) would funnel
+        # every row of a hot bucket into ONE task (windows can't be
+        # skew-split) — the exact flood case star mode exists for.
+        stats = bands.groupBy(*key).agg(
+            F.min(F.struct("url_id", "card_i")).alias("_min"),
+            F.count("*").alias("_n"),
         )
-    if salt_target is not None:
-        hot = sizes.where(F.col("_n") > salt_target)
         if max_band_bucket is not None:
-            hot = hot.where(F.col("_n") <= max_band_bucket)
-        bands = bands.join(F.broadcast(hot), ["band_id", "band"], "left").withColumn(
-            "_s",
-            F.ceil(F.coalesce(F.col("_n"), F.lit(1)) / F.lit(salt_target)).cast("int"),
+            stats = stats.where(F.col("_n") <= max_band_bucket)
+        # inner join: rows in dropped (oversized) buckets simply don't match
+        lo = F.col("url_id") < F.col("_min.url_id")
+        return (
+            bands.join(stats, key)
+            .where(F.col("url_id") != F.col("_min.url_id"))
+            .select(
+                F.least("url_id", F.col("_min.url_id")).alias("id_a"),
+                F.greatest("url_id", F.col("_min.url_id")).alias("id_b"),
+                F.when(lo, F.col("card_i")).otherwise(F.col("_min.card_i")).alias("card_a"),
+                F.when(lo, F.col("_min.card_i")).otherwise(F.col("card_i")).alias("card_b"),
+            )
+            .where(_cb_keep(cfg.tau))
+            .dropDuplicates(["id_a", "id_b"])
         )
-        all_salts = F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
-        own_salt = F.pmod(F.xxhash64("url_id"), F.col("_s")).cast("int")
-        a = bands.select(
-            "band_id",
-            "band",
-            own_salt.alias("sa"),
-            all_salts.alias("sb"),
-            F.col("url_id").alias("id_a"),
-            F.col("card_i").alias("card_a"),
-        )
-        b = bands.select(
-            "band_id",
-            "band",
-            all_salts.alias("sa"),
-            own_salt.alias("sb"),
-            F.col("url_id").alias("id_b"),
-            F.col("card_i").alias("card_b"),
-        )
-        join_key = ["band_id", "band", "sa", "sb"]
-    else:
-        a = bands.select(
-            F.col("band_id"),
-            F.col("band"),
-            F.col("url_id").alias("id_a"),
-            F.col("card_i").alias("card_a"),
-        )
-        b = bands.select(
-            F.col("band_id"),
-            F.col("band"),
-            F.col("url_id").alias("id_b"),
-            F.col("card_i").alias("card_b"),
-        )
-        join_key = ["band_id", "band"]
-    tau = cfg.tau
-    pairs = (
-        a.join(b, on=join_key)
-        .where(F.col("id_a") < F.col("id_b"))
-        # CB prune before the dedup shuffle (cheap, symmetric form)
-        .where(
-            F.least("card_a", "card_b").cast("double")
-            / F.greatest("card_a", "card_b").cast("double")
-            >= F.lit(tau)
-        )
-        .select("id_a", "id_b", "card_a", "card_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return pairs
+    if max_band_bucket is not None or salt_target is not None:
+        bands, sizes = _drop_oversized(bands, key, max_band_bucket)
+    a = bands.select(*key, F.col("url_id").alias("id_a"), F.col("card_i").alias("card_a"))
+    b = bands.select(*key, F.col("url_id").alias("id_b"), F.col("card_i").alias("card_b"))
+    if salt_target is not None:
+        # both sides of a band key hold its n rows
+        a, b = _salt(a, b, key, sizes.withColumnRenamed("_n", "_load"), salt_target)
+        key = key + ["sa", "sb"]
+    return _self_join(a, b, key, cfg.tau)

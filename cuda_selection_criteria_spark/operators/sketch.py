@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.spread import spread
 from ..oracle import DedupConfig
 from ..sketchlib.batch import (
     hll_batch,
@@ -146,23 +147,9 @@ def sketch_pages(
         id_col = F.xxhash64(F.col("url"))
     else:
         id_col = F.monotonically_increasing_id()
-    if pages.isStreaming:
-        # streaming sources size their own micro-batch partitions; no
-        # partition probe (inputFiles/rdd are undefined on streams)
-        src = pages.select("url", id_col.alias("url_id"), "text")
-        return src.mapInPandas(_sketch_batches(cfg), schema=sketch_schema(cfg))
-    if min_partitions is None:
-        min_partitions = pages.sparkSession.sparkContext.defaultParallelism
     narrow = ["url", "text"] + (["url_id"] if "url_id" in pages.columns else [])
-    src = pages.select(*narrow)
-    # partition-count probe: the PLANNED partitions, not the file count
-    # — Spark packs many small files into fewer splits (file count would
-    # overstate parallelism and skip a needed repartition) and splits
-    # large files into more. One .rdd access per sketch_pages call is
-    # plan-time only (no job); the RDD conversion is never executed.
-    n_parts = src.rdd.getNumPartitions()
-    if n_parts < min_partitions:
-        src = src.repartition(min_partitions)
+    # a no-op on streams: their sources size their own micro-batches
+    src = spread(pages.select(*narrow), min_partitions)
     # id assigned AFTER the optional repartition so dense ids are a
     # function of the final (materialized) partition layout
     src = src.select("url", id_col.alias("url_id"), "text")

@@ -1,7 +1,7 @@
 """Streaming near-duplicate candidate generation: a custom stateful
 operator built on ``applyInPandasWithState``.
 
-The batch pipeline's star pairing (operators/candidates._star_pairs)
+The batch pipeline's star pairing (operators/candidates, "star" mode)
 re-expressed for an unbounded crawl stream: sketches are computed by
 the SAME fused mapInPandas stage (mapInPandas works on streaming
 DataFrames), bands explode exactly as in batch, and per (band_id,
@@ -107,7 +107,7 @@ def streaming_band_candidates(
     micro-batches to service future timeouts and never terminates
     (measured: 36 empty batches in 60 s on a one-file drain).
     """
-    sk = sketch_pages(pages, cfg, min_partitions=1 if pages.isStreaming else None)
+    sk = sketch_pages(pages, cfg)
     bands = explode_bands(sk, cfg)
     timeout = (
         GroupStateTimeout.NoTimeout

@@ -76,6 +76,16 @@ def test_embedding_knn(spark):
     assert 3 not in rows
 
 
+def test_embedding_knn_lone_vector_has_no_neighbour(spark):
+    """A vector whose only non-zero-norm peer is itself emits nothing,
+    at k=1 as at k>1 (it used to come back as its own neighbour at -inf)."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    assert embedding_knn(df, k=1).collect() == []
+    assert embedding_knn(df, k=3).collect() == []
+
+
 def test_ngram_jaccard_hash_key_matches_gram(spark):
     """key='hash' (8-byte shuffle keys, scale default) must reproduce
     the key='gram' result exactly on the corpus."""

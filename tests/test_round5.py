@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 from cuda_selection_criteria_spark.oracle import DedupConfig
 from cuda_selection_criteria_spark.operators import sketch_pages
-from cuda_selection_criteria_spark.operators.candidates import cb_bucket_pairs
+from cuda_selection_criteria_spark.operators.candidates import (
+    _drop_oversized,
+    _salt,
+    cb_bucket_pairs,
+)
 from cuda_selection_criteria_spark.pipeline import dedup_pipeline, pages_from_corpus
 from cuda_selection_criteria_spark.sketchlib.hll import (
     ertl_mle,
@@ -193,27 +197,28 @@ def test_cb_salted_pairs_identical_to_unsalted(spark):
 
 
 def test_cb_salt_bounds_per_key_rows(spark):
-    """No single (bkt, sa) key may hold more than ~salt_target rows per
-    side — the straggler bound the guard enforces within a
-    log-cardinality bucket (r4 VERDICT #1: previously quadratic)."""
+    """No single (bkt, sa, sb) key may hold more than ~salt_target rows
+    on the operator's salted a-side — the straggler bound the guard
+    enforces within a log-cardinality bucket (r4 VERDICT #1: previously
+    quadratic). The load here is each bucket's own size n_k, the least
+    the operator's load (max of n_k and its +-1 neighbourhood) can be,
+    so the bound holds a fortiori for the operator's finer split."""
     import math
 
     cfg = DedupConfig(tau=0.9, shingle_k=16, smh_m=64, hll_p=14, criterion="cb")
     sk = sketch_pages(_flood_pages(spark), cfg).localCheckpoint(eager=True)
     inv_log = 1.0 / math.log(1.0 / cfg.tau)
     target = 16
-    base = sk.where(F.col("card_i") > 0).select(
-        "url_id",
+    rows = sk.where(F.col("card_i") > 0).select(
+        F.col("url_id").alias("id_a"),
+        F.col("card_i").alias("card_a"),
         F.floor(F.log(F.col("card_i").cast("double")) * F.lit(inv_log)).alias("bkt"),
     )
-    sizes = base.groupBy("bkt").agg(F.count("*").alias("_n"))
+    _, sizes = _drop_oversized(rows, ["bkt"], None)
     assert sizes.agg(F.max("_n")).collect()[0][0] >= FLOOD  # flood is real
-    salted = (
-        base.join(sizes, "bkt")
-        .withColumn("_s", F.ceil(F.col("_n") / F.lit(target)).cast("int"))
-        .withColumn("sa", F.pmod(F.xxhash64("url_id"), F.col("_s")).cast("int"))
-    )
-    per_key = salted.groupBy("bkt", "sa").agg(F.count("*").alias("rows"))
+    b = rows.select("bkt", F.col("id_a").alias("id_b"), F.col("card_a").alias("card_b"))
+    a, _ = _salt(rows, b, ["bkt"], sizes.withColumnRenamed("_n", "_load"), target)
+    per_key = a.groupBy("bkt", "sa", "sb").agg(F.count("*").alias("rows"))
     assert per_key.agg(F.max("rows")).collect()[0][0] <= 2 * target
 
 
