@@ -19,6 +19,17 @@ Results are partitioning-independent by construction everywhere this
 is applied (groupBy/join keys, per-row projections, pure-function
 sampling), so plans change but row sets do not — the oracle hash
 checks pin that.
+
+Use it on scan-rooted inputs only. The width test reads
+``df.rdd.getNumPartitions()``, which is free on a file scan or a
+checkpoint, but on an input rooted in a shuffle it is not a planned
+count: under AQE the ``.rdd`` conversion runs the input's shuffle map
+stages right away and reports the count after coalescing (a probe on
+Spark 4.1, local[4], 8 shuffle partitions: one job, count 1). Those
+stages then run again when the real query executes. A post-shuffle
+input that AQE folds into one partition (the verify stage's
+candidates) therefore needs an explicit-count ``repartition`` at the
+call site instead; see ``operators/verify.py``.
 """
 
 from __future__ import annotations
@@ -35,8 +46,8 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if min_partitions is None:
         min_partitions = sc.defaultParallelism
     # planned partitions, not file count: Spark packs small files into
-    # fewer splits and splits large files into more (plan-time only —
-    # the .rdd conversion is never executed)
+    # fewer splits and splits large files into more (no job runs for a
+    # scan-rooted input; see the module docstring for shuffle roots)
     if df.rdd.getNumPartitions() < min_partitions:
         return df.repartition(min_partitions)
     return df

@@ -247,19 +247,3 @@ def union_cardinality(regs_a: np.ndarray, regs_b: np.ndarray, p: int) -> float:
     """union_size(): estimate over elementwise max registers (hll.h:1188-1210)."""
     return ertl_mle(sum_counts(np.maximum(regs_a, regs_b)), p)
 
-
-def union_cardinality_batch(regs_a: np.ndarray, regs_b: np.ndarray, p: int) -> np.ndarray:
-    """Union cardinalities for a batch of register pairs.
-
-    ``regs_a``, ``regs_b``: uint8 arrays of shape [B, 2^p]. The register
-    max + histogram are fully vectorized; the MLE secant runs per row
-    (cheap: ~64-entry histogram per pair).
-    """
-    mx = np.maximum(regs_a, regs_b)
-    B, m = mx.shape
-    # vectorized per-row histogram: offset each row into its own bin range
-    offsets = (np.arange(B, dtype=np.int64) * 64)[:, None]
-    flat = (mx.astype(np.int64) + offsets).ravel()
-    hist = np.bincount(flat, minlength=B * 64).reshape(B, 64)
-    p_ = int(np.log2(m))
-    return ertl_mle_batch(hist, p_)

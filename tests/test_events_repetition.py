@@ -237,3 +237,21 @@ def test_asof_join_rejects_reserved_column_clash(spark):
     right = spark.createDataFrame([(1, 9, 2.0)], "user_id long, ts long, value double")
     with pytest.raises(ValueError, match="reserves"):
         asof_join(left, right, on=["user_id"], order_by=["ts"], payload="value")
+
+
+def test_asof_join_right_payload_may_share_out_col_name(spark):
+    from cuda_selection_criteria_spark.functions import asof_join
+
+    left = spark.createDataFrame([(1, 10), (1, 3)], "user_id long, ts long")
+    # the payload is named like the default out_col: it is carried, not clobbered
+    right = spark.createDataFrame(
+        [(1, 5, 2.0)], "user_id long, ts long, asof_value double"
+    )
+    got = asof_join(left, right, on=["user_id"], order_by=["ts"], payload="asof_value")
+    assert {r["ts"]: r["asof_value"] for r in got.collect()} == {10: 2.0, 3: None}
+    # a right-side key named like an internal tag column still raises
+    right_side = spark.createDataFrame(
+        [(1, 5, 2.0)], "user_id long, _side long, value double"
+    )
+    with pytest.raises(ValueError, match="reserves"):
+        asof_join(left, right_side, on=["user_id"], order_by=["_side"], payload="value")

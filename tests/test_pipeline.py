@@ -96,3 +96,44 @@ def test_determinism_two_runs(spark, result):
     res2 = dedup_pipeline(pages)
     got2 = {(r.url_a, r.url_b): r.jaccard for r in res2.dup_pairs.collect()}
     assert got == got2
+
+
+def test_verify_fans_out_single_partition_candidates(spark):
+    """Candidates that arrive as one partition (AQE folds the pair-dedup
+    shuffle's 32-byte rows into one) are verified on several partitions,
+    with exactly the pairs and jaccards of one pass over all of them."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from cuda_selection_criteria_spark.operators import (
+        candidate_pairs,
+        sketch_pages,
+        verify_pairs,
+    )
+    from cuda_selection_criteria_spark.operators.verify import _verify_batches
+
+    cfg = DedupConfig()
+    pages = pages_from_corpus(spark, N_ROWS, SEED, partitions=4)
+    sk = sketch_pages(pages, cfg).localCheckpoint(eager=True)
+    cands = candidate_pairs(sk, cfg).coalesce(1).localCheckpoint(eager=True)
+    assert cands.rdd.getNumPartitions() == 1
+    out = (
+        verify_pairs(cands, sk, cfg)
+        .withColumn("pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    assert out.select("pid").distinct().count() > 1
+    got = {(r.url_a, r.url_b, r.jaccard) for r in out.collect()}
+
+    payload = sk.select("url_id", "url", "hll14").toPandas()
+    one = cands.toPandas()
+    for side in ("a", "b"):
+        one = one.merge(
+            payload.rename(
+                columns={"url_id": f"id_{side}", "url": f"url_{side}", "hll14": f"hll_{side}"}
+            ),
+            on=f"id_{side}",
+        )
+    want = pd.concat(list(_verify_batches(cfg)(iter([one]))))
+    assert len(want) > 1
+    assert got == set(want.itertuples(index=False, name=None))

@@ -9,6 +9,7 @@ transport must roundtrip losslessly at every density.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from cuda_selection_criteria_spark.sketchlib.batch import (
@@ -17,13 +18,15 @@ from cuda_selection_criteria_spark.sketchlib.batch import (
     encode_registers_sparse,
     hll_batch,
     hll_cards_encode_batch,
+    register_histograms,
     superminhash_batch,
+    union_histograms,
 )
 from cuda_selection_criteria_spark.sketchlib.hashes import (
     shingle_hashes,
     shingle_hashes_batch,
 )
-from cuda_selection_criteria_spark.sketchlib.hll import hll_build
+from cuda_selection_criteria_spark.sketchlib.hll import ertl_mle_batch, hll_build
 from cuda_selection_criteria_spark.sketchlib.smh import superminhash
 
 _texts = st.lists(
@@ -103,3 +106,40 @@ def test_register_roundtrip_any_density(nnz, p, rnd):
     blobs = encode_registers_sparse(regs)
     assert len(blobs[0]) <= m  # never larger than dense
     np.testing.assert_array_equal(decode_registers(blobs, p), regs)
+
+
+def _register_pool(p: int, rng: np.random.Generator) -> list[bytes]:
+    """Encoded register files of every density: empty, sparse, just
+    under and over the sparse/dense crossover, and full."""
+    m = 1 << p
+    crossover = (m - 4) // 3
+    sizes = [0, 0, 1, 2, m // 64, m // 10, m // 10, crossover - 1, crossover + 1, m // 2, m]
+    regs = np.zeros((len(sizes) * 3, m), dtype=np.uint8)
+    for i, nnz in enumerate(sizes * 3):
+        idx = rng.choice(m, size=nnz, replace=False)
+        regs[i, idx] = rng.integers(1, 66 - p, size=idx.size)
+    return encode_registers_sparse(regs)
+
+
+@pytest.mark.parametrize("p", [8, 14])
+@pytest.mark.parametrize("n_pairs", [1, 257, 513])
+def test_union_histograms_equal_dense_register_max(p, n_pairs):
+    rng = np.random.default_rng(1000 * p + n_pairs)
+    pool = _register_pool(p, rng)
+    m = 1 << p
+    assert {len(b) == m for b in pool} == {True, False}  # both layouts
+    assert min(len(b) for b in pool) == 4  # an empty document (nnz 0)
+    ia = rng.integers(0, len(pool), n_pairs)
+    ib = rng.integers(0, len(pool), n_pairs)
+    ib[: n_pairs // 4] = ia[: n_pairs // 4]  # a document paired with itself
+    ia[0] = ib[0] = 0  # empty with empty
+    a = [pool[i] for i in ia]
+    b = [pool[i] for i in ib]
+    want = register_histograms(np.maximum(decode_registers(a, p), decode_registers(b, p)))
+    got = union_histograms(a, b, p)
+    np.testing.assert_array_equal(got, want)
+    np.testing.assert_array_equal(ertl_mle_batch(got, p), ertl_mle_batch(want, p))
+
+
+def test_union_histograms_empty_batch():
+    assert union_histograms([], [], 14).shape == (0, 64)

@@ -235,7 +235,7 @@ def test_cb_max_bucket_drops_flooded_bucket(spark):
 
 def test_ertl_mle_batch_empty_batch():
     """Empty batches return an empty array (the listcomps this replaced
-    did); callers like cardinalities()/union_cardinality_batch must not
+    did); callers like cardinalities() and the verify stage must not
     crash on zero-row inputs."""
     out = ertl_mle_batch(np.zeros((0, 64), dtype=np.int64), 14)
     assert out.shape == (0,)
