@@ -86,10 +86,13 @@ def verify_pairs(
     its byte-based coalescing folds the pair-dedup shuffle's 32-byte
     rows into a single verify task. The count matters only while both
     joins broadcast; a sketch table too large to broadcast is joined by
-    shuffles at the session's width. Not the shuffle width either: on a
-    4-core host each Python task paid ~0.3 s of fixed start-up, so a
-    second wave cost more than it saved (7.5k pairs: 1.00 s verify at
-    4 tasks, 1.38 s at 8).
+    shuffles at the session's width, which re-shuffle the candidates on
+    id_a. The round-robin exchange is then pure extra cost, accepted:
+    0.01-0.08 s on 7.5k pairs with sort-merge joins forced, inside the
+    run-to-run spread. Not the shuffle width: on a 4-core host each
+    Python task paid ~0.3 s of fixed start-up, so a second wave cost
+    more than it saved (7.5k pairs: 1.00 s verify at 4 tasks, 1.38 s
+    at 8).
 
     ``with_ids=True`` additionally carries the surrogate id spine
     (id_a, id_b) through to the output so downstream consumers

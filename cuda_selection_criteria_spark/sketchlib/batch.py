@@ -339,15 +339,18 @@ def _register_entries(blobs, m: int) -> tuple[np.ndarray, np.ndarray, np.ndarray
     return offs, np.concatenate(idx_parts), np.concatenate(rank_parts)
 
 
-def union_histograms(blobs_a, blobs_b, p: int, chunk: int = 256) -> np.ndarray:
+_UNION_CHUNK = 256  # pairs per scratch fill: [256, 2^14] uint8 = 4 MiB
+
+
+def union_histograms(blobs_a, blobs_b, p: int) -> np.ndarray:
     """64-bin histograms of the register max of each blob pair: the
     same integers as ``register_histograms(np.maximum(
     decode_registers(blobs_a, p), decode_registers(blobs_b, p)))``, in
     O(nnz_a + nnz_b) work per pair instead of O(2^p).
 
-    Per chunk of pairs, side a's registers are scattered into a reused
-    [chunk, 2^p] uint8 scratch (4 MiB at p=14) and histogrammed. Side b
-    gathers the registers it touches: each one it raises moves from bin
+    Per chunk of ``_UNION_CHUNK`` pairs, side a's registers are
+    scattered into a reused [chunk, 2^p] uint8 scratch and histogrammed.
+    Side b gathers the registers it touches: each one it raises moves from bin
     ``old`` to bin ``rank_b`` (``hist_a + bincount(max(old, rank_b)) -
     bincount(old)``, restricted to the entries where the two differ).
     Bin 0 is what is left of 2^p. Only the written positions are zeroed
@@ -362,8 +365,9 @@ def union_histograms(blobs_a, blobs_b, p: int, chunk: int = 256) -> np.ndarray:
         return hist
     oa, ia, ra = _register_entries(blobs_a, m)
     ob, ib, rb = _register_entries(blobs_b, m)
-    regs = np.zeros(min(chunk, n) * m, dtype=np.uint8)
-    rows = np.arange(min(chunk, n), dtype=np.int64)
+    chunk = min(_UNION_CHUNK, n)
+    regs = np.zeros(chunk * m, dtype=np.uint8)
+    rows = np.arange(chunk, dtype=np.int64)
     for lo in range(0, n, chunk):
         hi = min(lo + chunk, n)
         cnk = hi - lo
