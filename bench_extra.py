@@ -7,6 +7,7 @@ Usage:
   python bench_extra.py time   [query ...]   # noop-sink wall per query
   python bench_extra.py plan   [query ...]   # dump formatted plans
   python bench_extra.py all                  # headline set
+  python bench_extra.py worker [N]           # Python-boundary floor, median of N
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), BENCH_EXTRA_REPEATS (default 2),
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -56,10 +58,52 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def worker_floor(spark, runs: int) -> dict:
+    """Fixed cost of a Python task: medians over ``runs`` of a one-row
+    JVM-only job, the same row through a pass-through mapInPandas job,
+    and one ``importlib.invalidate_caches()`` (which PySpark calls at
+    every task start) timed inside a third job's worker."""
+    from cuda_selection_criteria_spark.zipimport_guard import WORKER_PROBE_SCHEMA, worker_probe
+
+    width = spark.sparkContext.defaultParallelism
+    one = spark.range(1, numPartitions=1)
+    passthrough = one.mapInPandas(lambda batches: batches, one.schema)
+    probe = one.mapInPandas(worker_probe, WORKER_PROBE_SCHEMA)
+    # two tasks per core, twice: every worker has run a task before timing
+    for _ in range(2):
+        spark.range(2 * width, numPartitions=2 * width).mapInPandas(
+            worker_probe, WORKER_PROBE_SCHEMA
+        ).collect()
+    jvm, udf, inv, installed = [], [], [], set()
+    for _ in range(runs):
+        for df, walls in ((one, jvm), (passthrough, udf)):
+            t0 = time.perf_counter()
+            df.collect()
+            walls.append(time.perf_counter() - t0)
+        (row,) = probe.collect()
+        inv.append(row.invalidate_s)
+        installed.add(row.installed)
+    med = statistics.median
+    return {
+        "runs": runs,
+        "jvm_job_s": round(med(jvm), 4),
+        "map_in_pandas_job_s": round(med(udf), 4),
+        "worker_invalidate_caches_s": round(med(inv), 5),
+        "guard_installed": sorted(installed),
+    }
+
+
 def main() -> None:
+    mode = sys.argv[1] if len(sys.argv) > 1 else "all"
+    if mode == "worker":
+        spark = get_session()
+        runs = int(sys.argv[2]) if len(sys.argv) > 2 else 20
+        print(json.dumps({"cpus": int(CPUS), "python": sys.version.split()[0], **worker_floor(spark, runs)}))
+        spark.stop()
+        return
+
     import __spark_entry__ as entrymod
 
-    mode = sys.argv[1] if len(sys.argv) > 1 else "all"
     names = sys.argv[2:] or HEADLINE
     qs = entrymod.queries()
     spark = get_session()

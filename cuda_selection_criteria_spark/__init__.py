@@ -8,4 +8,8 @@ candidate generation, exact reference Jaccard verification, and
 connected-components clustering. See SURVEY.md for the blueprint.
 """
 
+from .zipimport_guard import install as _install_zipimport_guard
+
 __version__ = "0.1.0"
+
+_install_zipimport_guard()

@@ -89,10 +89,13 @@ def verify_pairs(
     shuffles at the session's width, which re-shuffle the candidates on
     id_a. The round-robin exchange is then pure extra cost, accepted:
     0.01-0.08 s on 7.5k pairs with sort-merge joins forced, inside the
-    run-to-run spread. Not the shuffle width: on a 4-core host each
-    Python task paid ~0.3 s of fixed start-up, so a second wave cost
-    more than it saved (7.5k pairs: 1.00 s verify at 4 tasks, 1.38 s
-    at 8).
+    run-to-run spread. Not the shuffle width: a second wave of Python
+    tasks cost more than it saved (7.5k pairs: 1.00 s verify at 4
+    tasks, 1.38 s at 8, on a 4-core host). Most of that per-task cost
+    was CPython < 3.12 re-reading the directories of pyspark.zip and the
+    spark-core jar at every task start (~0.2 s), which
+    ``zipimport_guard`` now skips; a one-row mapInPandas job still
+    takes ~0.05 s longer than a JVM-only one.
 
     ``with_ids=True`` additionally carries the surrogate id spine
     (id_a, id_b) through to the output so downstream consumers

@@ -137,3 +137,37 @@ def test_verify_fans_out_single_partition_candidates(spark):
     want = pd.concat(list(_verify_batches(cfg)(iter([one]))))
     assert len(want) > 1
     assert got == set(want.itertuples(index=False, name=None))
+
+
+def test_worker_zipimport_guard_and_late_py_file(spark, tmp_path):
+    """A package UDF installs the zipimport guard in its worker, and a zip
+    shipped with addPyFile after the workers started (a new zipimporter
+    in a worker that already guards the old ones) imports in a later
+    task."""
+    import importlib
+    import sys
+    import zipfile
+
+    import pandas as pd
+
+    from cuda_selection_criteria_spark.zipimport_guard import (
+        WORKER_PROBE_SCHEMA,
+        worker_probe,
+    )
+
+    four = spark.range(4, numPartitions=4)
+    rows = four.mapInPandas(worker_probe, WORKER_PROBE_SCHEMA).collect()
+    assert {r.installed for r in rows} == {sys.version_info < (3, 12)}
+
+    mod = "late_py_file_probe"
+    path = tmp_path / f"{mod}.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{mod}.py", "VALUE = 42\n")
+    spark.sparkContext.addPyFile(str(path))
+
+    def use(batches):
+        value = importlib.import_module(mod).VALUE
+        for pdf in batches:
+            yield pd.DataFrame({"v": [value] * len(pdf)})
+
+    assert [r.v for r in four.mapInPandas(use, "v long").collect()] == [42] * 4
